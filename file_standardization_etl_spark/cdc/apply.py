@@ -13,9 +13,9 @@ Pipeline per batch (≈ one "job run" of the reference,
    interleaving").
 3. **Validation split** — vectorized reason column → (valid, quarantine);
    quarantine is written idempotently per (batch, chunk) directory.
-4. **LWW dedup** — max_by per doc_id (map-side combine kills most skew);
-   salted two-phase reduction engaged automatically when the batch's key
-   histogram is hot.
+4. **LWW dedup** — :func:`.dedup.lww_winners`, a primitive max per doc_id
+   (map-side combine kills most skew); the salted two-phase reduction
+   engages when a chunk's row count reaches ``salt_threshold``.
 5. **MERGE** — bucket-pruned join-and-rewrite with the LSN monotonic guard
    (``new.lsn > old.last_lsn``); deletes tombstone without forgetting
    ``last_lsn`` so lower-LSN stragglers can never resurrect a row.
@@ -48,6 +48,7 @@ from pyspark.sql import types as T
 
 from ..functions.validation import validation_reason_expr, with_reason
 from ..lake.table import BROADCAST_MAX_KEY_ROWS, LakeTable, bucket_expr
+from .dedup import lww_winners
 from .events import EVENT_SCHEMA, SOURCE_WHITELIST
 
 QUARANTINE_REASONS = ["null_tokens", "empty_tokens", "bad_n_tok", "bad_source"]
@@ -111,18 +112,15 @@ class CdcEngine:
         spark: SparkSession,
         table_path: str,
         whitelist: list[str] | None = None,
-        validation_mode: str = "hybrid",  # hybrid | slim | arrow | pandas | expr
         # Rows-per-chunk above which the two-phase salted LWW engages.
-        # Effectively opt-in by default: the max_by hash aggregate already
+        # Effectively opt-in by default: the LWW hash aggregate already
         # pre-reduces every hot key map-side (a key collapses to one row
         # per task before the shuffle), and measured replays show salting
         # a normal batch costs ~1.6x (the (key, salt) pre-reduction
-        # multiplies group cardinality by salt_buckets). Lower this only
-        # for adversarial distributions where a single task's group
-        # cardinality overflows the agg hash table, or when using the
-        # window-based LWW formulation (which has no map-side combine).
+        # multiplies group cardinality by dedup.SALT_BUCKETS). Lower this
+        # only for adversarial distributions where a single task's group
+        # cardinality overflows the agg hash table.
         salt_threshold: int = 500_000_000,
-        salt_buckets: int = 32,
         n_buckets: int = 16,
         # merge commit strategy, passed to LakeTable.merge. The CDC
         # resolver is LWW-by-LSN with a monotone watermark — exactly the
@@ -148,10 +146,8 @@ class CdcEngine:
         )
         self.manifest_dir = os.path.join(self.table_path, "_manifest")
         self.whitelist = list(whitelist or SOURCE_WHITELIST)
-        self.validation_mode = validation_mode
         # chunks with more rows than this use the two-phase salted LWW
         self.salt_threshold = salt_threshold
-        self.salt_buckets = salt_buckets
         self.n_buckets = n_buckets
         self.merge_mode = merge_mode
         self.table = LakeTable(spark, os.path.join(self.table_path, "target"))
@@ -222,15 +218,8 @@ class CdcEngine:
                             continue
                         qsrc = os.path.join(path, "route=q")
                         if os.path.isdir(qsrc):
-                            mode = (
-                                "slim"
-                                if self.validation_mode == "hybrid"
-                                else self.validation_mode
-                            )
                             reasoned = with_reason(
-                                self.spark.read.parquet(qsrc),
-                                self.whitelist,
-                                mode=mode,
+                                self.spark.read.parquet(qsrc), self.whitelist
                             )
                             if reasoned.limit(1).count() > 0:
                                 # stage-then-rename, NEVER a direct write to
@@ -378,9 +367,8 @@ class CdcEngine:
             self.quarantine_path, f"batch_id={batch_id}", f"chunk={ck}"
         )
         tmp = os.path.join(self.table_path, "_staging", f"quar_b{batch_id}_c{ck}")
-        mode = "slim" if self.validation_mode == "hybrid" else self.validation_mode
         obs = Observation(f"bootstrap-quar-{batch_id}")
-        reasoned = with_reason(invalid, self.whitelist, mode=mode).observe(
+        reasoned = with_reason(invalid, self.whitelist).observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             *[
@@ -773,10 +761,9 @@ class CdcEngine:
             return {"examined": examined, "rescued": 0, "merged": 0}
         rescued = self.spark.read.parquet(rescued_stage)
         # LWW within the rescued set (one doc may have several rescued
-        # events). Deletes never quarantine, so every row is an upsert and
-        # max(lsn) alone picks the winner — an all-primitive HashAggregate,
-        # no struct buffer (same rule as the hot path).
-        winners = rescued.groupBy("doc_id").agg(F.max("lsn").alias("lsn"))
+        # events) — the hot path's LWW; deletes never quarantine, so every
+        # winner is an upsert
+        winners = lww_winners(rescued).select("doc_id", "lsn")
         delta = rescued.join(winners, ["doc_id", "lsn"])
         nb = self.table.snapshot()["n_buckets"]
         stats = (
@@ -1049,14 +1036,10 @@ class CdcEngine:
             #          persist, no recompute races) into the bucket-pruned
             #          MERGE (no internal distinct/count jobs).
             _t = time.time()
-            _timing = os.environ.get("SPARK_CDC_TIMING") == "1"
 
             def _mark(label):
                 nonlocal _t
-                dt = time.time() - _t
-                self.timings[label] = self.timings.get(label, 0.0) + dt
-                if _timing:
-                    print(f"[cdc-timing] {label}: {dt:.2f}s", flush=True)
+                self.timings[label] = self.timings.get(label, 0.0) + time.time() - _t
                 _t = time.time()
 
             lineage_future = self._pool.submit(
@@ -1122,47 +1105,15 @@ class CdcEngine:
                 self.table_path, "_staging", f"b{batch_id}_c{ck}"
             )
 
-            # LWW scale path: narrow (key -> max lsn, cnt, winner op)
-            # aggregation — token arrays never enter an agg buffer —
-            # then the routed pass fetches the winning payload rows.
-            # The winner's op rides INSIDE the lsn as `lsn*2 +
-            # is_delete`: a string/struct agg buffer (max_by) would
-            # force SortAggregate (per-partition sorts, spill-prone at
-            # high thread counts); an all-primitive max keeps the agg
-            # a HashAggregate with full map-side combine, which is
-            # also what makes hot keys a non-issue (each key collapses
-            # to one row per task before the shuffle).
+            # LWW: narrow (key -> max lsn, winner op, cnt) aggregation —
+            # token arrays never enter an agg buffer — then the routed
+            # pass fetches the winning payload rows
             dedup_cols = ["doc_id", "lsn", "op", "tokens", "n_tok", "source"]
-            slim = valid.select(*dedup_cols)
-            combined = F.col("lsn") * 2 + F.when(
-                F.col("op") == "delete", F.lit(1)
-            ).otherwise(F.lit(0))
-            if rows_in >= self.salt_threshold:
-                salted_any = True
-                salted = slim.select(
-                    "doc_id",
-                    combined.alias("__c"),
-                    F.pmod(F.xxhash64(F.col("lsn")), F.lit(self.salt_buckets)).alias(
-                        "__salt"
-                    ),
-                )
-                partial = salted.groupBy("doc_id", "__salt").agg(
-                    F.max("__c").alias("__c"), F.count(F.lit(1)).alias("__cnt")
-                )
-                winners = partial.groupBy("doc_id").agg(
-                    F.max("__c").alias("__c"), F.sum("__cnt").alias("cnt")
-                )
-            else:
-                winners = slim.select("doc_id", combined.alias("__c")).groupBy(
-                    "doc_id"
-                ).agg(F.max("__c").alias("__c"), F.count(F.lit(1)).alias("cnt"))
+            salted = rows_in >= self.salt_threshold
+            salted_any = salted_any or salted
             nb = self.table.snapshot()["n_buckets"]
-            winners = winners.select(
-                "doc_id",
-                F.shiftright("__c", 1).alias("lsn"),
-                (F.col("__c") % 2 == 1).alias("win_del"),
-                "cnt",
-                bucket_expr(F.col("doc_id"), nb).alias("_wb"),
+            winners = lww_winners(valid, salted=salted).select(
+                "*", bucket_expr(F.col("doc_id"), nb).alias("_wb")
             ).persist()
             q_future = None
             stage_future = None
@@ -1215,14 +1166,9 @@ class CdcEngine:
                     # q-slice; stage-then-swap so a redelivered (fully
                     # LSN-filtered) chunk can't clobber the original
                     # delivery's quarantine
-                    reason_mode = (
-                        "slim" if self.validation_mode == "hybrid" else self.validation_mode
-                    )
-
                     def _finalize_quarantine(
                         qsrc=os.path.join(staging, "route=q"),
                         qdir=qdir,
-                        mode=reason_mode,
                         tag=f"quar-{batch_id}-{ck}",
                     ):
                         # staging is driver-local: existence, not a bare
@@ -1233,7 +1179,7 @@ class CdcEngine:
                             return None  # no invalid rows staged (or redelivery)
                         qdf = self.spark.read.parquet(qsrc)
                         obs = Observation(tag)
-                        reasoned = with_reason(qdf, self.whitelist, mode=mode).observe(
+                        reasoned = with_reason(qdf, self.whitelist).observe(
                             obs,
                             F.count(F.lit(1)).alias("n"),
                             *[

@@ -192,13 +192,6 @@ def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **opti
     ).mode(mode).save()
 
 
-def write_wal_segment(df: DataFrame, log_dir: str, coalesce: int | None = None) -> None:
-    """Append one WAL segment (a set of parquet files) to the change-log
-    directory consumed by the streaming runner."""
-    w = df.coalesce(coalesce) if coalesce else df
-    w.write.mode("append").parquet(log_dir)
-
-
 def documents_as_change_events(docs: DataFrame, lsn_start: int = 1) -> DataFrame:
     """Bridge the shared `documents` fixture into the change-event shape
     (FIXTURES.md §6): deterministic md5-based tokenization of `text`, doc_id

@@ -33,12 +33,8 @@ def main():
     ap.add_argument(
         "--salt-threshold", type=int, default=500_000_000,
         help="rows/chunk above which the two-phase salted LWW engages "
-        "(max_by already pre-reduces hot keys map-side; lower only for "
+        "(the LWW aggregate already pre-reduces hot keys map-side; lower only for "
         "adversarial distributions)",
-    )
-    ap.add_argument(
-        "--validation-mode", default="hybrid",
-        choices=["hybrid", "slim", "arrow", "pandas", "expr"],
     )
     ap.add_argument("--synthesize", type=int, default=0, help="generate N synthetic events into --log-dir first")
     ap.add_argument(
@@ -73,7 +69,6 @@ def main():
         args.table_dir,
         n_buckets=args.n_buckets,
         salt_threshold=args.salt_threshold,
-        validation_mode=args.validation_mode,
         maintain_vocab=args.maintain_vocab,
     )
     engine.init()

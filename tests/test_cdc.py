@@ -5,14 +5,15 @@ from __future__ import annotations
 
 import pytest
 
+from file_standardization_etl_spark.cdc import dedup
 from file_standardization_etl_spark.cdc.apply import CdcEngine
-from file_standardization_etl_spark.cdc.dedup import lww_maxby, lww_maxby_salted, lww_window
+from file_standardization_etl_spark.cdc.dedup import lww_maxby, lww_winners
 from file_standardization_etl_spark.cdc.events import (
     EventGenConfig,
     events_df,
     generate_events,
 )
-from file_standardization_etl_spark.cdc.oracle import OracleState, replay
+from file_standardization_etl_spark.cdc.oracle import OracleState, replay, validation_reason
 
 
 def assert_state_matches(engine: CdcEngine, oracle: OracleState):
@@ -144,15 +145,26 @@ def test_hot_key_salted_path_equals_unsalted(spark, tmp_path):
     assert_state_matches(cold, oracle)
 
 
-def test_lww_variants_agree(spark):
+def test_lww_variants_agree(spark, monkeypatch):
+    """The engine's LWW (salted with 8 buckets and unsalted), the
+    registry's max_by LWW and the dict oracle pick the same winner per doc."""
+    from collections import Counter
+
     cfg = EventGenConfig(n_events=5000, n_docs=50, seed=17, zipf_a=1.1)
-    df = events_df(spark, generate_events(cfg)).filter("op != 'schema_change'")
-    cols = ["doc_id", "lsn", "op", "n_tok"]
-    a = {tuple(r) for r in lww_maxby(df.select(*cols)).collect()}
-    b = {tuple(r) for r in lww_maxby_salted(df.select(*cols), salt_buckets=8).collect()}
-    c = {tuple(r) for r in lww_window(df.select(*cols)).collect()}
-    d = {tuple(r) for r in lww_window(df.select(*cols), salt_buckets=8).collect()}
-    assert a == b == c == d
+    evs = [
+        e for e in generate_events(cfg)
+        if e["op"] != "schema_change" and validation_reason(e) is None
+    ]
+    df = events_df(spark, evs).select("doc_id", "lsn", "op")
+    oracle = replay(evs)
+    want = {(k, v["last_lsn"], v["deleted"]) for k, v in oracle.docs.items()}
+    counts = Counter(e["doc_id"] for e in evs)
+    plain = {tuple(r) for r in lww_winners(df).collect()}
+    monkeypatch.setattr(dedup, "SALT_BUCKETS", 8)
+    salted = {tuple(r) for r in lww_winners(df, salted=True).collect()}
+    maxby = {(r["doc_id"], r["lsn"], r["op"] == "delete") for r in lww_maxby(df).collect()}
+    assert plain == salted == {(k, lsn, d, counts[k]) for k, lsn, d in want}
+    assert maxby == want
 
 
 def test_manifest_lineage(spark, tmp_path):

@@ -1,21 +1,22 @@
-"""Validation parity: Catalyst expression == pandas/Arrow UDF == pure-Python
-oracle, on the same generated events (including every corruption class)."""
+"""Validation parity: Catalyst expression == slim Arrow UDF == pure-Python
+oracle, on the same generated events (including every corruption class),
+and the engine's expression split + UDF reasons against the dict oracle."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from file_standardization_etl_spark.cdc.apply import CdcEngine
 from file_standardization_etl_spark.cdc.events import (
     SOURCE_WHITELIST,
     EventGenConfig,
     events_df,
     generate_events,
 )
-from file_standardization_etl_spark.cdc.oracle import validation_reason
+from file_standardization_etl_spark.cdc.oracle import replay, validation_reason
 from file_standardization_etl_spark.functions.validation import (
-    make_validation_reason_pandas_udf,
-    split_valid_quarantine,
     validation_reason_expr,
+    with_reason,
 )
 
 
@@ -28,17 +29,15 @@ def _events(spark, n=2000, seed=31):
     return evs, events_df(spark, evs)
 
 
+def _expr_reason():
+    return validation_reason_expr(
+        F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), SOURCE_WHITELIST
+    )
+
+
 def test_expr_matches_oracle(spark):
     evs, df = _events(spark)
-    got = {
-        r["lsn"]: r["reason"]
-        for r in df.withColumn(
-            "reason",
-            validation_reason_expr(
-                F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), SOURCE_WHITELIST
-            ),
-        ).collect()
-    }
+    got = {r["lsn"]: r["reason"] for r in df.withColumn("reason", _expr_reason()).collect()}
     want = {e["lsn"]: validation_reason(e) for e in evs}
     assert got == want
     assert set(filter(None, want.values())) == {
@@ -47,54 +46,55 @@ def test_expr_matches_oracle(spark):
 
 
 def test_pandas_udf_matches_expr(spark):
-    _, df = _events(spark, seed=37)
-    fn = make_validation_reason_pandas_udf(SOURCE_WHITELIST)
-    both = df.select(
-        "lsn",
-        validation_reason_expr(
-            F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), SOURCE_WHITELIST
-        ).alias("expr_reason"),
-        fn(F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source")).alias("udf_reason"),
-    )
-    mismatches = both.filter(
-        ~(
-            (F.col("expr_reason").isNull() & F.col("udf_reason").isNull())
-            | (F.col("expr_reason") == F.col("udf_reason"))
-        )
-    ).count()
-    assert mismatches == 0
+    """The slim Arrow UDF, the Catalyst expression and the oracle assign
+    the same reason to every event, every reason class included."""
+    evs, df = _events(spark, seed=37)
+    rows = with_reason(df, SOURCE_WHITELIST).select(
+        "lsn", F.col("reason").alias("udf_reason"), _expr_reason().alias("expr_reason")
+    ).collect()
+    udf = {r["lsn"]: r["udf_reason"] for r in rows}
+    expr = {r["lsn"]: r["expr_reason"] for r in rows}
+    want = {e["lsn"]: validation_reason(e) for e in evs}
+    assert udf == expr == want
+    assert set(filter(None, want.values())) == {
+        "null_tokens", "empty_tokens", "bad_n_tok", "bad_source"
+    }
 
 
-def test_split_is_partition(spark):
+def test_split_is_partition(spark, tmp_path):
+    """The engine's split: every event is either valid (expression null)
+    or quarantined with a non-null reason, never both, never neither."""
     evs, df = _events(spark, seed=41)
-    valid, quar = split_valid_quarantine(df, SOURCE_WHITELIST, use_pandas_udf=True)
-    assert valid.count() + quar.count() == len(evs)
+    engine = CdcEngine(spark, str(tmp_path / "cdc"))
+    engine.init()
+    m = engine.apply_batch(df, batch_id=0)
+    quar = engine.quarantine()
     assert quar.filter(F.col("reason").isNull()).count() == 0
+    q_lsns = {r["lsn"] for r in quar.select("lsn").collect()}
+    valid_lsns = {r["lsn"] for r in df.filter(_expr_reason().isNull()).select("lsn").collect()}
+    assert m.rows_in == len(evs)
+    assert m.rows_quarantined == len(q_lsns)
+    assert not q_lsns & valid_lsns
+    assert q_lsns | valid_lsns == {e["lsn"] for e in evs}
+    state_lsns = {r["last_lsn"] for r in engine.state(include_deleted=True).collect()}
+    assert state_lsns <= valid_lsns
 
 
 def test_engine_validation_modes_agree(spark, tmp_path):
-    """Engine-level parity of every --validation-mode: identical final
-    state AND identical quarantine (lsn → reason) for hybrid / slim /
-    arrow / pandas / expr."""
-    import pytest  # noqa: F401
-
-    from file_standardization_etl_spark.cdc.apply import CdcEngine
-    from file_standardization_etl_spark.cdc.oracle import replay
-
+    """The engine's one validation path (expression pre-split, slim UDF
+    reasons on the candidates): final state AND quarantine (lsn → reason)
+    equal the dict oracle's."""
     evs, df = _events(spark, n=1500, seed=77)
     oracle = replay(evs)
+    engine = CdcEngine(spark, str(tmp_path / "cdc"))
+    engine.init()
+    engine.apply_batch(df, batch_id=0)
+    got_state = {
+        r["doc_id"]: (list(r["tokens"]), r["last_lsn"]) for r in engine.state().collect()
+    }
     want_state = {
         k: (list(v["tokens"]), v["last_lsn"]) for k, v in oracle.live_docs().items()
     }
-    want_quar = {(q["lsn"], q["reason"]) for q in oracle.quarantine}
-    for mode in ("hybrid", "slim", "arrow", "pandas", "expr"):
-        engine = CdcEngine(spark, str(tmp_path / f"cdc_{mode}"), validation_mode=mode)
-        engine.init()
-        engine.apply_batch(df, batch_id=0)
-        got_state = {
-            r["doc_id"]: (list(r["tokens"]), r["last_lsn"])
-            for r in engine.state().collect()
-        }
-        got_quar = {(r["lsn"], r["reason"]) for r in engine.quarantine().collect()}
-        assert got_state == want_state, f"state diverged in mode={mode}"
-        assert got_quar == want_quar, f"quarantine diverged in mode={mode}"
+    assert got_state == want_state
+    got_quar = {(r["lsn"], r["reason"]) for r in engine.quarantine().collect()}
+    assert got_quar == {(q["lsn"], q["reason"]) for q in oracle.quarantine}
